@@ -29,7 +29,7 @@ object BenchOne {
       val cnt = fn(spark, sfDir).count()
       println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($cnt rows)")
       // per-trial cache discipline, matching graft.Bench: without
-      // this, a pinByKey-backed query's runs 2..n can be served from
+      // this, a Pin.keyed-backed query's runs 2..n can be served from
       // run 1's persisted plans and the wall measures a cache read
       spark.sharedState.cacheManager.clearCache()
     }

@@ -3967,8 +3967,8 @@ object Queries {
       (s: SparkSession, d: String) => {
         // pinned once: the corpus build and the extension both
         // consume the edge relation
-        val e = ext.Pin.pin(ext.Graph.coEdges(t(s, d, "lineitem"),
-          col("l_orderkey"), col("l_partkey")))
+        val e = ext.Graph.coEdges(t(s, d, "lineitem"),
+          col("l_orderkey"), col("l_partkey")).localCheckpoint()
         ext.Walks.extendWalks(ext.Walks.walks(e, length = 3), e,
           fromLength = 3, extraSteps = 2)
       },
@@ -3991,8 +3991,8 @@ object Queries {
     // steps; oracle = the from-scratch length-5 biased chain
     ("graph_walks_biased_extended",
       (s: SparkSession, d: String) => {
-        val e = ext.Pin.pin(ext.Graph.coEdges(t(s, d, "lineitem"),
-          col("l_orderkey"), col("l_partkey")))
+        val e = ext.Graph.coEdges(t(s, d, "lineitem"),
+          col("l_orderkey"), col("l_partkey")).localCheckpoint()
         ext.Walks.extendBiasedWalks(
           ext.Walks.biasedWalks(e, length = 3, 1L, 4L, 2L), e,
           fromLength = 3, extraSteps = 2, 1L, 4L, 2L)

@@ -54,7 +54,7 @@ object Betweenness {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "betw.adj", col("src"))
+    val adj = Pin.keyed(e, "betw.adj", Seq(col("src")))
     val seeds = adj.select(col("src").as("node_id")).distinct()
       .filter(col("node_id") < seedMax)
       .select(col("node_id").as("seed"))

@@ -47,11 +47,11 @@ object Community {
     * edge relation — built once and pinned; LPA consumes it every
     * round and the modularity scorer twice more. */
   private def adjacency(edges: DataFrame): DataFrame =
-    Dedup.spreadCached(edges
+    Pin.keyed(edges
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(edges
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr"))),
-      "lpa.adj", col("node"))
+      "lpa.adj", Seq(col("node")))
 
   /** `rounds` synchronous LPA rounds over `edges`. Returns the final
     * (node_id, community) labeling, community ids being node ids (a
@@ -76,8 +76,8 @@ object Community {
           max(col("__sz")).cast("long").as("largest"))
         .select(lit(r.toLong).as("round"), col("n_communities"),
           col("largest"))
-    var lab = Pin.pin(adj.select(col("node")).distinct()
-      .select(col("node"), col("node").as("label")))
+    var lab = adj.select(col("node")).distinct()
+      .select(col("node"), col("node").as("label")).localCheckpoint()
     var trace = census(0, lab)
     for (r <- 1 to rounds) {
       val cand = adj
@@ -86,10 +86,10 @@ object Community {
         .agg(count(lit(1)).as("__c"))
       val win = Window.partitionBy(col("node"))
         .orderBy(col("__c").desc, col("label").asc)
-      lab = Pin.pin(cand
+      lab = cand
         .withColumn("__rk", row_number().over(win))
         .filter(col("__rk") === 1)
-        .select(col("node"), col("label")))
+        .select(col("node"), col("label")).localCheckpoint()
       trace = trace.unionAll(census(r, lab))
     }
     (lab, trace.orderBy("round"))
@@ -106,9 +106,9 @@ object Community {
     * the rows is the partition's modularity Q in ppm (up to the
     * declared per-term truncation — identical on both engines). */
   def modularity(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
-    val lab = Pin.pin(lpaChain(e, rounds)._1)
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
+    val lab = lpaChain(e, rounds)._1.localCheckpoint()
     val m = e.agg(count(lit(1)).as("__m"))
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("__d"))

@@ -20,7 +20,7 @@ import graft.functions.Hashing
   */
 object Dedup {
 
-  /** Pin an explicit-N hash repartition on the streamed side of a
+  /** An explicit-N hash repartition on the streamed side of a
     * pair-generating join. Candidate joins here have TINY inputs
     * (band/bucket tables, a few MB) but huge outputs (bucket-local
     * pair expansion) — AQE's shuffle coalescing sizes partitions by
@@ -32,60 +32,6 @@ object Dedup {
   private[graft] def spread(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       keys: _*)
-
-  /** [[spread]] + pin + the §43/§47 DISCIPLINE ASSERTION, for the
-    * iterating families' round inputs (textrank, hits, bfs, sssp,
-    * lpa, kcore, walks): these relations are byte-light but CPU-heavy
-    * per round, and AQE's byte-proportional sizing coalesces them to
-    * ONE task — serializing every round's expansion join (999 idle
-    * executors on a 1000-executor cluster). The explicit
-    * repartition-by-num is AQE-exempt, so the checkpoint must land
-    * with the full shuffle width at ANY data size; the assertion is
-    * the regression tripwire that fires if a future edit, a spread
-    * rewrite, or a Spark-upgrade AQE change silently collapses it
-    * (SpreadDisciplineSpec drives the whole registry through it). */
-  private[graft] def spreadPinned(df: DataFrame, tag: String,
-                                  keys: Column*): DataFrame =
-    assertSpread(Pin.pin(spread(df, keys: _*)), tag)
-
-  /** [[spreadPinned]]'s partitioning-PRESERVING sibling for the
-    * iterating families' loop-invariant relations (adjacency lists,
-    * edge lookups): [[Pin.pinByKey]] + the same discipline
-    * assertion. Where [[spreadPinned]]'s checkpoint erases the hash
-    * partitioning (so every round's join re-exchanges the full
-    * relation), this keeps it visible to the planner — each round's
-    * expansion join exchanges only the frontier. Deterministic
-    * relations only (persist keeps lineage; see [[Pin.pinByKey]]). */
-  private[graft] def spreadCached(df: DataFrame, tag: String,
-                                  keys: Column*): DataFrame =
-    assertSpread(Pin.pinByKey(df, keys: _*), tag)
-
-  /** [[spreadCached]] at `mult`× the session shuffle width — for
-    * inputs whose consumer stage amplifies rows (wedge joins, pair
-    * expansions), where the consumer's partial-agg state is
-    * amplification-sized and narrower widths spill
-    * (see [[Pin.pinByKeyN]]). */
-  private[graft] def spreadCachedWide(df: DataFrame, tag: String,
-                                      mult: Int, keys: Column*)
-      : DataFrame =
-    assertSpread(Pin.pinByKeyN(df,
-      mult * df.sparkSession.sessionState.conf.numShufflePartitions,
-      keys: _*), tag)
-
-  /** The discipline check alone: a round-checkpoint relation in an
-    * iterating family must carry more than one partition whenever
-    * the session is parallel at all. */
-  private[graft] def assertSpread(pinned: DataFrame,
-                                  tag: String): DataFrame = {
-    val want =
-      pinned.sparkSession.sessionState.conf.numShufflePartitions
-    val got = pinned.rdd.getNumPartitions
-    require(want <= 1 || got > 1,
-      s"[$tag] iterating-round input landed on $got partition(s) " +
-        s"with numShufflePartitions=$want — the AQE single-task trap " +
-        "(SCALE.md §43/§47); a spread was dropped or rewritten")
-    pinned
-  }
 
   /** Whitespace tokens. */
   def words(text: Column): Column = split(text, " ")

@@ -57,7 +57,7 @@ object Graph {
     * self-join and measured 3-5× slower on the sf0.1 triangle build
     * (30 s vs 6-7 s) — the guard must be a cheap side-table, not a
     * decoration on the main table. The guarded item table is
-    * [[Pin.pin]]ned: both self-join sides read the one materialized
+    * checkpointed: both self-join sides read the one materialized
     * snapshot instead of each re-evaluating distinct+guard. */
   def coEdges(df: DataFrame, group: Column, item: Column,
               maxGroupSize: Int = DefaultMaxGroupSize): DataFrame = {
@@ -83,7 +83,7 @@ object Graph {
       .agg(count(lit(1)).as("__gn"))
       .filter(col("__gn") > maxGroupSize)
       .select(col("g"))
-    Pin.pin(base.join(oversize, Seq("g"), "left_anti"))
+    base.join(oversize, Seq("g"), "left_anti").localCheckpoint()
   }
 
   /** Audit of the groups [[coEdges]]/[[basketLift]] skip: every group
@@ -115,7 +115,7 @@ object Graph {
     // twice-derived orientation subtree — plans/r12/
     // graph_triangles_after.txt ops 7-9/18-20/32-34/43-45), each a
     // full edge re-scan with its own exchange (guide §2.4)
-    val deg = Dedup.spreadPinned(
+    val deg = Pin.checkpoint(
       e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", col("n"))
 
@@ -130,13 +130,14 @@ object Graph {
     // zero exchange and zero sort on either side (the r12 plan
     // derived the whole deg-join orientation subtree TWICE, with an
     // exchange+sort pair on each side of the wedge join)
-    val oriented = Dedup.spreadCachedWide(withDeg.select(
+    val oriented = Pin.keyed(withDeg.select(
       when(col("du") < col("dv") ||
            (col("du") === col("dv") && col("u") < col("v")), col("u"))
         .otherwise(col("v")).as("src"),
       when(col("du") < col("dv") ||
            (col("du") === col("dv") && col("u") < col("v")), col("v"))
-        .otherwise(col("u")).as("dst")), "tri.oriented", 4, col("src"))
+        .otherwise(col("u")).as("dst")), "tri.oriented", Seq(col("src")),
+      width = 4)
 
     // wedges at the apex: (apex)->(b), (apex)->(c) with b ordered
     // before c in the SAME orientation order is unnecessary — any
@@ -193,8 +194,8 @@ object Graph {
     // distinct) a second time — measured 3.1 → 5.0 s when the r13
     // triangle pins first landed, back under the old wall once the
     // leaf is shared (guide §2.4)
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     val deg = e.select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy("node_id").agg(count(lit(1)).as("degree"))
     deg.join(triangleCounts(e), Seq("node_id"), "left")
@@ -271,7 +272,7 @@ object Graph {
       .agg(count(lit(1)).as("__gn"))
       .filter(col("__gn") > maxBasket)
       .select(col("o"))
-    val g = Pin.pin(all.join(oversize, Seq("o"), "left_anti"))
+    val g = all.join(oversize, Seq("o"), "left_anti").localCheckpoint()
     val nOrders = all.select(col("o")).distinct()
       .agg(count(lit(1)).as("__n"))
     val marg = all.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
@@ -376,8 +377,8 @@ object Graph {
     * every join equi-keyed, nothing quadratic in the catalog. */
   def linkPredict(edges: DataFrame, minCn: Long, k: Int,
                   maxDegree: Int = DefaultMaxGroupSize): DataFrame = {
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     val (deg, adjOk) = cappedAdjacency(e, maxDegree, "linkpred")
     linkPredictTail(e, deg, adjOk, minCn, k)
   }
@@ -397,7 +398,7 @@ object Graph {
     *    agg (grouped on (a, i), a prefix), the verify tail's
     *    neighbor-array agg (grouped on a) — runs with zero exchange
     *    and zero sort on this side. 4× width because the wedge
-    *    consumer AMPLIFIES rows (see [[Pin.pinByKeyN]]); the extra
+    *    consumer AMPLIFIES rows (see [[Pin.keyed]]); the extra
     *    width is harmless to the prefix-keyed aggs.
     *
     * Factored out in round 13 so [[linkPredictApproxRecall]] builds
@@ -406,16 +407,16 @@ object Graph {
     * re-aggregated degrees and built two separate caches of the SAME
     * capped relation (guide §2.4: the cheapest shuffle is the one
     * not run twice). `e` must be pinned (lineage-unique) per the
-    * [[Pin.pinByKey]] no-cross-run-cache tripwire. */
+    * [[Pin.keyed]] no-cross-run-cache tripwire. */
   private def cappedAdjacency(e: DataFrame, maxDegree: Int,
                               tag: String): (DataFrame, DataFrame) = {
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
-    val deg = Dedup.spreadPinned(adj.groupBy(col("a"))
+    val deg = Pin.checkpoint(adj.groupBy(col("a"))
       .agg(count(lit(1)).as("degree")), s"$tag.deg", col("a"))
-    val adjOk = Dedup.spreadCachedWide(adj.join(
+    val adjOk = Pin.keyed(adj.join(
       deg.filter(col("degree") <= maxDegree).select(col("a")), Seq("a"),
-      "left_semi"), s"$tag.adj", 4, col("a"))
+      "left_semi"), s"$tag.adj", Seq(col("a")), width = 4)
     (deg, adjOk)
   }
 
@@ -490,18 +491,18 @@ object Graph {
     * have contributed ≤ 1e6/maxDegree per pair). */
   def linkPredictRa(edges: DataFrame, minCn: Long, k: Int,
                     maxDegree: Int = DefaultMaxGroupSize): DataFrame = {
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
     // same pinned-degree + cached-apex-partitioned discipline as
     // [[linkPredict]] (one degree agg, zero-exchange wedge join)
-    val deg = Dedup.spreadPinned(adj.groupBy(col("a"))
+    val deg = Pin.checkpoint(adj.groupBy(col("a"))
       .agg(count(lit(1)).as("degree")), "linkpred.ra.deg", col("a"))
-    val adjOk = Dedup.spreadCachedWide(adj.join(
+    val adjOk = Pin.keyed(adj.join(
         deg.filter(col("degree") <= maxDegree), Seq("a"))
       .withColumn("wt", expr("1000000L div degree")),
-      "linkpred.ra.adj", 4, col("a"))
+      "linkpred.ra.adj", Seq(col("a")), width = 4)
     val w1 = adjOk.select(col("a"), col("wt"), col("n").as("u"))
     val w2 = adjOk.select(col("a"), col("n").as("v"))
     w1.join(w2, Seq("a")).filter(col("u") < col("v"))
@@ -601,8 +602,8 @@ object Graph {
     require(nHashes >= 1 && k >= 1)
     require(nHashes <= graft.functions.Hashing.Perms.size,
       s"nHashes > ${graft.functions.Hashing.Perms.size} needs more Perms")
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     // degree cap FIRST: one count agg + a semi join, so hub nodes
     // never reach the signature agg, the band join, or the
     // collect_list verify arrays — the O(deg) payload bound. The
@@ -614,7 +615,7 @@ object Graph {
     // stage AQE carved from its byte-light input (the §43 trap,
     // measured here as a 2.0 s 2-task stage).
     val (_, adj) = cappedAdjacency(e, maxDegree, "linkpred.approx")
-    approxRankTail(e, adj, Pin.pin(neighborMinhash(adj, nHashes)),
+    approxRankTail(e, adj, neighborMinhash(adj, nHashes).localCheckpoint(),
       k, minCn, maxBucket)
   }
 
@@ -675,9 +676,9 @@ object Graph {
     // repartition and strips it as redundant). A cached scan cannot
     // be coalesced and serves BOTH sides of the self-join with zero
     // exchange and zero sort.
-    val banded = Dedup.spreadCached(
+    val banded = Pin.keyed(
       sigs.join(oversize, Seq("i", "h"), "left_anti"),
-      "linkpred.banded", col("i"), col("h"))
+      "linkpred.banded", Seq(col("i"), col("h")))
     val cand = banded.select(col("i"), col("h"), col("a").as("u"))
       .join(banded.select(col("i"), col("h"), col("a").as("v")),
         Seq("i", "h"))
@@ -825,14 +826,14 @@ object Graph {
                                  maxBucket: Int = DefaultMaxGroupSize,
                                  maxDegree: Int = DefaultMaxGroupSize): DataFrame = {
     val adjAll = spark.read.parquet(s"$dir/adj")
-    val e = Pin.pin(adjAll.filter(col("a") < col("n"))
-      .select(col("a").as("u"), col("n").as("v")))
+    val e = adjAll.filter(col("a") < col("n"))
+      .select(col("a").as("u"), col("n").as("v")).localCheckpoint()
     val okDeg = adjAll.groupBy(col("a")).agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") <= maxDegree).select(col("a"))
     val adj = adjAll.join(okDeg, Seq("a"), "left_semi")
-    val sigs = Pin.pin(spark.read.parquet(s"$dir/sigs")
+    val sigs = spark.read.parquet(s"$dir/sigs")
       .groupBy(col("a"), col("i")).agg(min(col("h")).as("h"))
-      .join(okDeg, Seq("a"), "left_semi"))
+      .join(okDeg, Seq("a"), "left_semi").localCheckpoint()
     approxRankTail(e, adj, sigs, k, minCn, maxBucket)
   }
 
@@ -847,8 +848,8 @@ object Graph {
     * deployment turns (more hashes = more recall, linear cost). */
   def linkPredictApproxRecall(edges: DataFrame, minCn: Long, k: Int,
                               nHashes: Int = 8): DataFrame = {
-    val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val e = edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     // ONE shared front for both rankers (round-13, guide §2.4): the
     // exact and approx tails read the SAME pinned degree agg and the
     // SAME cached capped adjacency. Before, each ranker re-pinned the
@@ -863,7 +864,7 @@ object Graph {
     val exact = linkPredictTail(e, deg, adjOk, minCn, k)
       .select(col("u"), col("v"))
     val approx = approxRankTail(e, adjOk,
-      Pin.pin(neighborMinhash(adjOk, nHashes)), k, minCn,
+      neighborMinhash(adjOk, nHashes).localCheckpoint(), k, minCn,
       DefaultMaxGroupSize)
       .select(col("u"), col("v"), lit(1L).as("__hit"))
     exact.join(approx, Seq("u", "v"), "left")
@@ -1074,7 +1075,7 @@ object Graph {
     * declared deterministic query), so the DECLARED semantics are
     * exactly `rounds` peels: at 100 TB each round is one degree agg
     * + two semi-joins, all hash-partitioned on node id, and R is a
-    * dial. Each round's survivor edge set is [[Pin.pin]]ned — it
+    * dial. Each round's survivor edge set is checkpointed — it
     * feeds both that round's census row and the next round, and
     * without the pin round r's lineage re-evaluates rounds 1..r−1
     * (quadratic recompute). Census rows are 1-row aggregates. */
@@ -1087,7 +1088,7 @@ object Graph {
         col("n_nodes").cast("long").as("n_nodes"),
         col("n_edges").cast("long").as("n_edges"))
     }
-    var e = Dedup.spreadPinned(edges.select(col("u").cast("long").as("u"),
+    var e = Pin.checkpoint(edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")), "kcore.edges", col("u"))
     var out = census(0, e)
     for (r <- 1 to rounds) {
@@ -1101,10 +1102,10 @@ object Graph {
       // at sf0.1 (pure added exchange). The spread discipline is for
       // byte-LIGHT/CPU-HEAVY round inputs; the one-time input above
       // carries the tripwire for this family.
-      e = Pin.pin(e
+      e = e
         .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")))
+        .select(col("u"), col("v")).localCheckpoint()
       out = out.unionAll(census(r, e))
     }
     out.orderBy("round")
@@ -1118,7 +1119,7 @@ object Graph {
     * n_edges), and DuckDB's default CTE inlining would re-evaluate
     * the whole prefix chain per reference — ~5^R blowup, minutes at
     * sf0.01 (observed). Materialization is the oracle-side analog of
-    * the Spark side's [[Pin.pin]] per round. */
+    * the Spark side's `localCheckpoint()` per round. */
   def kcoreRoundsOracleSql(whereSql: String, k: Int, rounds: Int): String = {
     val sb = new StringBuilder
     sb ++= s"""WITH g AS MATERIALIZED (
@@ -1404,12 +1405,12 @@ object Bfs {
     // co-occurrence pair join twice), spread before the checkpoint
     // (AQE would coalesce a small agg to one partition and serialize
     // every level's expansion join)
-    val e = Pin.pin(edges)
-    val adj = Dedup.spreadCached(e
+    val e = edges.localCheckpoint()
+    val adj = Pin.keyed(e
       .select(col("u").cast("long").as("x"), col("v").cast("long").as("y"))
       .unionByName(e.select(col("v").cast("long").as("x"),
         col("u").cast("long").as("y")))
-      .distinct(), "bfs.adj", col("x"))
+      .distinct(), "bfs.adj", Seq(col("x")))
     var visited = adj.select(col("x")).distinct()
       .filter(col("x") < seedMax)
       .select(col("x").as("seed"), col("x").as("node_id"),
@@ -1530,13 +1531,13 @@ object Sssp {
     * the min-cost path within `rounds` hops, edge cost `1e6 DIV w`. */
   def sssp(edges: DataFrame, seedMax: Long, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = Pin.pin(edges)
-    val adj = Dedup.spreadCached(e.select(col("u").cast("long").as("x"),
+    val e = edges.localCheckpoint()
+    val adj = Pin.keyed(e.select(col("u").cast("long").as("x"),
         col("v").cast("long").as("y"),
         expr("1000000 DIV w").as("len"))
       .unionByName(e.select(col("v").cast("long").as("x"),
         col("u").cast("long").as("y"), expr("1000000 DIV w").as("len"))),
-      "sssp.adj", col("x"))
+      "sssp.adj", Seq(col("x")))
     var dist = adj.select(col("x")).distinct()
       .filter(col("x") < seedMax)
       .select(col("x").as("seed"), col("x").as("node_id"),
@@ -1664,7 +1665,7 @@ object Sssp {
   * reads as one surfer step from the seeds.
   *
   * Scale shape: adjacency spread+pinned once
-  * ([[graft.ext.Dedup.spreadPinned]] — the §43/§47 iterating-family
+  * ([[Pin.keyed]] — the §43/§47 iterating-family
   * discipline), per round one shuffle keyed on the edge source + one
   * keyed agg; score state is |V| rows, localCheckpoint'd per round
   * (bounded plan depth). Mass leaks only by DIV truncation (no
@@ -1684,7 +1685,7 @@ object Ppr {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "ppr.adj", col("src"))
+    val adj = Pin.keyed(e, "ppr.adj", Seq(col("src")))
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val ns = deg.filter(col("src") < seedMax)
       .agg(count(lit(1)).as("__ns"))
@@ -1793,7 +1794,7 @@ object Ppr {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "ppr.rec.adj", col("src"))
+    val adj = Pin.keyed(e, "ppr.rec.adj", Seq(col("src")))
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node_id"), col("deg"))
       .localCheckpoint()

@@ -56,10 +56,10 @@ object Hits {
     // two partitioning-visible pins make both edge sides exchange-free
     // for every iteration (the per-round shuffles that remain are the
     // keyed aggregations, i.e. the transposes themselves)
-    val e0 = Pin.pin(edges.select(col("c").cast("long").as("c"),
-      col("s").cast("long").as("s")))
-    val eC = Dedup.spreadCached(e0, "hits.edges.c", col("c"))
-    val eS = Dedup.spreadCached(e0, "hits.edges.s", col("s"))
+    val e0 = edges.select(col("c").cast("long").as("c"),
+      col("s").cast("long").as("s")).localCheckpoint()
+    val eC = Pin.keyed(e0, "hits.edges.c", Seq(col("c")))
+    val eS = Pin.keyed(e0, "hits.edges.s", Seq(col("s")))
     var h = eC.select(col("c")).distinct()
       .withColumn("h", lit(Scale)).localCheckpoint()
     var a: DataFrame = null

@@ -108,12 +108,12 @@ object Prefs {
   private def symSmoothed(pairs: DataFrame,
                           keys: Seq[String] = Nil): DataFrame = {
     val k = keys.map(col)
-    Pin.pin(
-      pairs.select(k ++ Seq(col("p_lo").as("a"), col("p_hi").as("b"),
-          (col("n_matches") + 2L).as("n"), (col("wins_lo") + 1L).as("w")): _*)
-        .unionAll(pairs.select(k ++ Seq(col("p_hi").as("a"),
-          col("p_lo").as("b"), (col("n_matches") + 2L).as("n"),
-          (col("n_matches") - col("wins_lo") + 1L).as("w")): _*)))
+    pairs.select(k ++ Seq(col("p_lo").as("a"), col("p_hi").as("b"),
+        (col("n_matches") + 2L).as("n"), (col("wins_lo") + 1L).as("w")): _*)
+      .unionAll(pairs.select(k ++ Seq(col("p_hi").as("a"),
+        col("p_lo").as("b"), (col("n_matches") + 2L).as("n"),
+        (col("n_matches") - col("wins_lo") + 1L).as("w")): _*))
+      .localCheckpoint()
   }
 
   /** The MM recursion from the flat start P = S, generalized over
@@ -130,8 +130,8 @@ object Prefs {
   private def mmRounds(sym: DataFrame, keys: Seq[String],
                        iters: Int): Seq[DataFrame] = {
     val k = keys.map(col)
-    var r = Pin.pin(sym.select(k :+ col("a").as("player"): _*).distinct()
-      .select(k ++ Seq(col("player"), lit(S).as("p")): _*))
+    var r = sym.select(k :+ col("a").as("player"): _*).distinct()
+      .select(k ++ Seq(col("player"), lit(S).as("p")): _*).localCheckpoint()
     val acc = scala.collection.mutable.ArrayBuffer(r)
     for (_ <- 1 to iters) {
       val prev = r
@@ -148,8 +148,8 @@ object Prefs {
           expr(s"(n * ${S2}L) div (pa + pb)").as("__t")): _*)
       val d = joined.groupBy(k :+ col("a"): _*)
         .agg(sum(col("w")).as("__ws"), sum(col("__t")).as("__denom"))
-      r = Pin.pin(d.select(k ++ Seq(col("a").as("player"),
-        expr(s"(__ws * ${S2}L) div __denom").as("p")): _*))
+      r = d.select(k ++ Seq(col("a").as("player"),
+        expr(s"(__ws * ${S2}L) div __denom").as("p")): _*).localCheckpoint()
       acc += r
     }
     acc.toSeq
@@ -183,7 +183,7 @@ object Prefs {
     * benign drift cancels) plus the UNsmoothed wins / n_matches a
     * consumer reads next to it. */
   def btRating(pairs0: DataFrame, iters: Int): DataFrame = {
-    val pairs = Pin.pin(pairs0)
+    val pairs = pairs0.localCheckpoint()
     val (rK, _) = ratingChain(pairs, iters)
     val tot = rK.agg(sum(col("p")).as("__sp"))
     val per = pairs.select(col("p_lo").as("player"), col("n_matches"),
@@ -204,7 +204,7 @@ object Prefs {
   /** Convergence trace as a declared query (iter, max_delta, sum_p),
     * iters rows — the dial a deployment reads to size `iters`. */
   def btConvergence(pairs: DataFrame, iters: Int): DataFrame =
-    ratingChain(Pin.pin(pairs), iters)._2.orderBy("iter")
+    ratingChain(pairs.localCheckpoint(), iters)._2.orderBy("iter")
 
   /** [[matchesFrom]] with the match DAY carried (match_day =
     * date(e1.ts)) — the windowed-leaderboard input. */
@@ -245,7 +245,7 @@ object Prefs {
     * one plan, not |days| driver-looped jobs. The daily-leaderboard /
     * rating-over-time read a preference pipeline actually ships. */
   def btRatingByDay(pairs0: DataFrame, iters: Int): DataFrame = {
-    val pairs = Pin.pin(pairs0)
+    val pairs = pairs0.localCheckpoint()
     val key = "match_day"
     val rK = mmRounds(symSmoothed(pairs, Seq(key)), Seq(key), iters).last
     val tot = rK.groupBy(col(key)).agg(sum(col("p")).as("__sp"))

@@ -66,9 +66,7 @@ object Profiler {
                                 value: Column, out: String): DataFrame = {
     // two-phase core shared with SuffixArray.denseRank — see
     // [[Rank.withPidAndBase]] for the boundary-draw consistency
-    // argument (checkpoint mode) and the heap-quiet fences dial.
-    // `order` must be ascending null-free keys (descending numeric
-    // orders pass the negated column — paretoAbc does).
+    // argument
     val withPb = Rank.withPidAndBase(df, order, value)
     val wLoc = Window.partitionBy(col("__pid")).orderBy(order: _*)
     withPb.withColumn("__lc", sum(value).over(wLoc))
@@ -89,8 +87,7 @@ object Profiler {
     val rev = lineitem.groupBy(partKey.cast("long").as("part_id"))
       .agg((sum(price.cast("decimal(14,2)")) * 100).cast("long")
         .as("rev_cents"))
-    // descending revenue as an ascending negated key (the rank core
-    // requires ascending null-free keys — see globalCumsum's note)
+    // descending revenue as an ascending negated key
     val cum = globalCumsum(rev,
       Seq(-col("rev_cents"), col("part_id")),
       col("rev_cents"), "cum_cents")
@@ -1744,7 +1741,7 @@ object Profiler {
           "div (d2 - d1)) end as long)").as("slope_ppm"))
     // pin once: the slope table feeds both the rank and the count;
     // unpinned, the |days|²/2 pair enumeration evaluates twice
-    val pinned = Pin.pin(slopes)
+    val pinned = slopes.localCheckpoint()
     val ranked = globalCumsum(pinned,
         Seq(col("slope_ppm"), col("d1"), col("d2")), lit(1L), "rk")
       .crossJoin(pinned.agg(count(lit(1)).as("p")))

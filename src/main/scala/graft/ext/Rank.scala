@@ -10,59 +10,23 @@ import org.apache.spark.sql.functions._
   * global sort. Callers add their local window (row_number / sum)
   * partitioned by `__pid` and offset it by `__base`.
   *
-  * Two modes via `spark.graft.rank.mode` (SCALE.md §31's two dials):
-  *
-  *  - `"checkpoint"` (default): range-repartition once, PIN the
-  *    materialization ([[Pin.pin]] — storage posture itself a dial),
-  *    derive bases from the pinned rows. One linear write; the pin is
-  *    what makes the boundary draw shared between the bases job and
-  *    the consumer job (RangePartitioner's sample seed varies with
-  *    the RDD id, so UNPINNED re-evaluation could draw different
-  *    boundaries — the §25 corruption).
-  *  - `"fences"`: evaluate the range draw ONCE into per-bucket
-  *    `(lo, count)` stats — at most `shuffle.partitions` rows of
-  *    bounded driver state, nothing row-scale retained — then
-  *    re-bucket the ORIGINAL input against the explicit lo-fences as
-  *    a literal expression. Consistency is by construction (pid and
-  *    base both derive from the same collected fence values, never
-  *    from re-evaluating partitioner lineage), so no row-scale
-  *    checkpoint exists at all: the trade is a second scan of the
-  *    input. This is the heap-quiet posture for single-JVM runs at
-  *    decade scale where the checkpoint itself was the GC driver.
-  *
-  * Fences mode requires ASCENDING, null-free order keys (every
-  * library call site after the pareto normalization — descending
-  * numeric orders pass the negated column). A null fence value falls
-  * back to checkpoint mode rather than risk null-comparison
-  * semantics.
+  * Range-repartition once, PIN the materialization
+  * (`localCheckpoint()`), derive bases from the pinned rows. One
+  * linear write; the pin is what makes the boundary draw shared
+  * between the bases job and the consumer job (RangePartitioner's
+  * sample seed varies with the RDD id, so UNPINNED re-evaluation
+  * could draw different boundaries — the §25 corruption).
   */
 object Rank {
-  val ModeKey = "spark.graft.rank.mode"
 
-  /** rows + `__pid` + `__base`, under the configured mode. `order`
-    * must be ascending null-free key EXPRESSIONS (not SortOrder). */
+  /** rows + `__pid` + `__base`. `order` is the range key list (plain
+    * expressions or SortOrder-decorated columns). */
   def withPidAndBase(df: DataFrame, order: Seq[Column],
                      value: Column): DataFrame = {
-    val mode = df.sparkSession.conf.getOption(ModeKey)
-      .map(_.toLowerCase).getOrElse("checkpoint")
-    if (mode == "fences")
-      // fences requires plain ascending value expressions as keys; a
-      // caller passing SortOrder-decorated columns (zipf_bands' desc,
-      // Layout's caller-supplied orders) fails the stats job's
-      // analysis — degrade to the always-correct checkpoint posture
-      // rather than surface a dial-dependent error (the dial is a
-      // cost choice, never a semantics choice)
-      try withFences(df, order, value)
-      catch { case scala.util.control.NonFatal(_) =>
-        withCheckpoint(df, order, value) }
-    else withCheckpoint(df, order, value)
-  }
-
-  private def withCheckpoint(df: DataFrame, order: Seq[Column],
-                             value: Column): DataFrame = {
     val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = Pin.pin(df.repartitionByRange(nPart, order: _*)
-      .withColumn("__pid", spark_partition_id()))
+    val ranged = df.repartitionByRange(nPart, order: _*)
+      .withColumn("__pid", spark_partition_id())
+      .localCheckpoint()
     val wBase = org.apache.spark.sql.expressions.Window
       .orderBy(col("__pid"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -71,44 +35,5 @@ object Rank {
       .withColumn("__base", coalesce(sum(col("__n")).over(wBase), lit(0L)))
       .select("__pid", "__base")
     ranged.join(broadcast(bases), "__pid")
-  }
-
-  private def withFences(df: DataFrame, order: Seq[Column],
-                         value: Column): DataFrame = {
-    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    // ONE evaluation of the range draw, reduced to <= nPart stat rows
-    val stats = df.repartitionByRange(nPart, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .groupBy(col("__pid"))
-      .agg(coalesce(sum(value), lit(0L)).as("__n"),
-        min(struct(order.zipWithIndex.map { case (c, i) =>
-          c.as(s"__k$i") }: _*)).as("__lo"))
-      .collect().sortBy(_.getInt(0))
-    if (stats.isEmpty)
-      return df.withColumn("__pid", lit(0)).withColumn("__base", lit(0L))
-    val los: Seq[Seq[Any]] = stats.map(_.getStruct(2))
-      .map(r => (0 until r.length).map(r.get))
-    if (los.exists(_.exists(_ == null)))
-      return withCheckpoint(df, order, value) // null keys: keep the pin
-    // lexicographic key >= fence, as a literal codegen predicate
-    def geFence(vals: Seq[Any]): Column = {
-      def rec(i: Int): Column = {
-        val k = order(i); val v = lit(vals(i))
-        if (i == order.length - 1) k >= v
-        else (k > v) || (k === v && rec(i + 1))
-      }
-      rec(0)
-    }
-    // compact pid: number of fences at or below the key (fence j =
-    // lo of non-empty bucket j, j >= 1); empty draw buckets vanish
-    val fences = los.drop(1)
-    val pidExpr =
-      if (fences.isEmpty) lit(0)
-      else fences.map(f => when(geFence(f), 1).otherwise(0)).reduce(_ + _)
-    val bases = stats.map(_.getLong(1)).scanLeft(0L)(_ + _).init
-    val baseExpr = bases.zipWithIndex.tail.foldLeft(lit(bases.head)) {
-      case (acc, (b, i)) => when(col("__pid") === i, b).otherwise(acc)
-    }
-    df.withColumn("__pid", pidExpr).withColumn("__base", baseExpr)
   }
 }

@@ -82,7 +82,7 @@ object SuffixArray {
     val kCols = keys.map(col)
     // two-phase core shared with Profiler.globalCumsum — see
     // [[Rank.withPidAndBase]] for the boundary-draw consistency
-    // argument (checkpoint mode) and the heap-quiet fences dial
+    // argument
     val withPb = Rank.withPidAndBase(distinctKeys, kCols, lit(1L))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(kCols: _*)
     withPb.withColumn("__li", row_number().over(wLocal))
@@ -126,8 +126,9 @@ object SuffixArray {
     val wordRank = rerank(toks.select("w").distinct(), Seq("w"))
     // checkpoint before the loop: round 1 consumes t twice (shifted
     // and unshifted), and group ids are only stable once materialized
-    var t = Pin.pin(toks.join(wordRank, "w")
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("rank")))
+    var t = toks.join(wordRank, "w")
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("rank"))
+      .localCheckpoint()
     var width = 1
     while (width < p) {
       val nxt = t.select(col("doc_id"), (col("pos") - width).as("pos"),
@@ -137,8 +138,8 @@ object SuffixArray {
         .na.fill(0L, Seq("__r2"))
       val rankMap = rerank(keyed.select("__r1", "__r2").distinct(),
         Seq("__r1", "__r2"))
-      t = Pin.pin(keyed.join(rankMap, Seq("__r1", "__r2"))
-        .select("doc_id", "pos", "rank"))
+      t = keyed.join(rankMap, Seq("__r1", "__r2"))
+        .select("doc_id", "pos", "rank").localCheckpoint()
       width *= 2
     }
     t

@@ -906,7 +906,7 @@ object TextAnalysis {
     // form on the ×10 probe (SCALE §47). The dict is vocab-bounded
     // (row_number over the sorted vocab — same class as the bounded
     // TakeOrdered) and joins back broadcast only on the k survivors.
-    val pairsP = Pin.pin(pairs)
+    val pairsP = pairs.localCheckpoint()
     val dict = pairsP.select(col("u").as("word"))
       .unionByName(pairsP.select(col("v").as("word")))
       .distinct()
@@ -920,10 +920,10 @@ object TextAnalysis {
       .join(broadcast(dict.select(col("word").as("v"),
         col("nid").as("vn"))), Seq("v"))
       .select(col("un"), col("vn"), col("w"))
-    val adj = graft.ext.Dedup.spreadCached(pairsN
+    val adj = Pin.keyed(pairsN
       .select(col("un").as("src"), col("vn").as("dst"), col("w"))
       .unionByName(pairsN.select(col("vn").as("src"),
-        col("un").as("dst"), col("w"))), "textrank.adj", col("src"))
+        col("un").as("dst"), col("w"))), "textrank.adj", Seq(col("src")))
     val wsum = adj.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
     var ranks = wsum
       .crossJoin(broadcast(wsum.agg(count(lit(1)).as("__n"))))

@@ -44,7 +44,7 @@ object Walks {
   private val stride = Hashing.Stage2._2
 
   /** Directed adjacency with neighbor ranks and degrees, pinned
-    * PARTITIONING-VISIBLY on `node` ([[Dedup.spreadCached]]): every
+    * PARTITIONING-VISIBLY on `node` ([[Pin.keyed]]): every
     * walk step joins it on the current node, and with the hash
     * partitioning preserved each step's join exchanges ONLY the
     * frontier — the adjacency (the big side at 100 TB) is shuffled
@@ -55,11 +55,11 @@ object Walks {
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(edges
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr")))
-    Dedup.spreadCached(adj
+    Pin.keyed(adj
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("node")).orderBy(col("nbr"))) - 1L)
       .withColumn("d", count(lit(1)).over(Window.partitionBy(col("node")))
-        .cast("long")), "walks.adj", col("node"))
+        .cast("long")), "walks.adj", Seq(col("node")))
   }
 
   /** The hash-selected neighbor index at step `s` for `walk_id`,
@@ -83,8 +83,9 @@ object Walks {
     * output is an exchange the consumer should not inherit). */
   private[ext] def walksKernel(edges: DataFrame, length: Int): DataFrame = {
     val adj = rankedAdjacency(edges)
-    val starts = Pin.pin(adj.select(col("node")).distinct()
-      .select(col("node").as("walk_id"), col("node").as("cur")))
+    val starts = adj.select(col("node")).distinct()
+      .select(col("node").as("walk_id"), col("node").as("cur"))
+      .localCheckpoint()
     val out0 = starts.select(col("walk_id"), lit(0L).as("step"),
       col("cur").as("node_id"))
     walkSteps(adj, starts, out0, from = 0, to = length)
@@ -106,10 +107,10 @@ object Walks {
     var frontier = frontier0
     var out = out0
     for (s <- from + 1 to to) {
-      frontier = Pin.pin(frontier
+      frontier = frontier
         .join(adj, col("cur") === col("node") &&
           col("rk") === expr(pickExpr(s)))
-        .select(col("walk_id"), col("nbr").as("cur")))
+        .select(col("walk_id"), col("nbr").as("cur")).localCheckpoint()
       out = out.unionAll(frontier.select(col("walk_id"),
         lit(s.toLong).as("step"), col("cur").as("node_id")))
     }
@@ -141,9 +142,9 @@ object Walks {
     // corpus-wide range sort per consumer. A prior that is already
     // a bare checkpoint scan is used as-is (Pin.ensure).
     val p = Pin.ensure(prior)
-    val frontier = Pin.pin(p
+    val frontier = p
       .filter(col("step") === fromLength.toLong)
-      .select(col("walk_id"), col("node_id").as("cur")))
+      .select(col("walk_id"), col("node_id").as("cur")).localCheckpoint()
     walkSteps(adj, frontier,
       p.select(col("walk_id"), col("step"), col("node_id")),
       from = fromLength, to = fromLength + extraSteps)
@@ -215,10 +216,10 @@ object Walks {
     graft.meta.MaintenanceLock.withLock(spark, dir) {
       val from = readLength(spark, dir)
       val adj = rankedAdjacency(edges)
-      val frontier = Pin.pin(spark.read.parquet(s"$dir/walks")
+      val frontier = spark.read.parquet(s"$dir/walks")
         .filter(col("step") === from)
         .select(col("walk_id").cast("long"),
-          col("node_id").cast("long").as("cur")))
+          col("node_id").cast("long").as("cur")).localCheckpoint()
       val empty = frontier.sparkSession.createDataFrame(
         frontier.sparkSession.sparkContext
           .emptyRDD[org.apache.spark.sql.Row],
@@ -264,8 +265,8 @@ object Walks {
     // straight off the pinned list — re-deriving [[walks]]'s ranked
     // adjacency here would add a second 2m-row rank window just to
     // read a count.
-    val edges = Pin.pin(edges0.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val edges = edges0.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     val deg = edges
       .select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy(col("node_id"))
@@ -292,8 +293,8 @@ object Walks {
     // pin the corpus partitioned on walk_id: both sides of the
     // window self-join read the same cached partitioning, so the
     // pair expansion runs with zero exchanges before its own agg
-    val w = Dedup.spreadCached(walksKernel(edges, length),
-      "walks.cooc", col("walk_id"))
+    val w = Pin.keyed(walksKernel(edges, length),
+      "walks.cooc", Seq(col("walk_id")))
     val a = w.select(col("walk_id"), col("step").as("__s1"),
       col("node_id").as("__n1"))
     val b = w.select(col("walk_id"), col("step").as("__s2"),
@@ -329,15 +330,15 @@ object Walks {
     * id = exactly [[rankedAdjacency]]'s rk order, so every selection
     * is bit-identical by construction.
     *
-    * `e` must be pinned (the [[Pin.pinByKey]] tripwire). */
+    * `e` must be pinned (the [[Pin.keyed]] tripwire). */
   private def neighborArrays(e: DataFrame): DataFrame = {
     val adj = e
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(e
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr")))
-    Dedup.spreadCached(adj.groupBy(col("node"))
+    Pin.keyed(adj.groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("nbrs")),
-      "walks.nbrs", col("node"))
+      "walks.nbrs", Seq(col("node")))
   }
 
   /** node2vec-style SECOND-ORDER biased walks (Grover & Leskovec
@@ -362,27 +363,26 @@ object Walks {
     biasedWalksKernel(edges, length, wReturn, wCommon, wOut)
       .orderBy("walk_id", "step")
 
-  /** Pin the long-typed edge projection UNLESS it already sits on a
-    * checkpoint/local leaf (round 13, guide §2.4): re-checkpointing
-    * an already-pinned relation copies the rows AND gives the derived
-    * neighbor-array cache a fresh lineage — so the from-scratch and
-    * extension legs of graph_walks_biased_extended each built their
-    * OWN cache of the same arrays (two full adjacency aggs + double
-    * the resident blocks, the r12-ADVICE walkBiasAudit bug in its
-    * second home). With the shared leaf, both legs' [[neighborArrays]]
-    * plans canonicalize identically and the second persist resolves
-    * to the FIRST cache entry. The [[Pin.pinByKey]] tripwire stays
-    * satisfied either way (a LogicalRDD/LocalRelation leaf is exactly
-    * what this checks for). */
-  private def ensurePinned(df: DataFrame): DataFrame = Pin.ensure(df)
-
   /** [[biasedWalks]] without the declared output ordering — see
-    * [[walksKernel]]. */
+    * [[walksKernel]].
+    *
+    * The long-typed edge projection is pinned through [[Pin.ensure]]
+    * (round 13, guide §2.4): re-checkpointing an already-pinned
+    * relation copies the rows AND gives the derived neighbor-array
+    * cache a fresh lineage — so the from-scratch and extension legs
+    * of graph_walks_biased_extended each built their OWN cache of the
+    * same arrays (two full adjacency aggs + double the resident
+    * blocks, the r12-ADVICE walkBiasAudit bug in its second home).
+    * With the shared leaf, both legs' [[neighborArrays]] plans
+    * canonicalize identically and the second persist resolves to the
+    * FIRST cache entry. The [[Pin.keyed]] tripwire stays satisfied
+    * either way (a LogicalRDD/LocalRelation leaf is exactly what it
+    * checks for). */
   private[ext] def biasedWalksKernel(edges: DataFrame, length: Int,
                                      wReturn: Long, wCommon: Long,
                                      wOut: Long): DataFrame =
     biasedWalksKernelPinned(
-      ensurePinned(edges.select(col("u").cast("long").as("u"),
+      Pin.ensure(edges.select(col("u").cast("long").as("u"),
         col("v").cast("long").as("v"))),
       length, wReturn, wCommon, wOut)
 
@@ -402,26 +402,28 @@ object Walks {
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "biased-walk weights must be strictly positive")
     val nbrArr = neighborArrays(e)
-    val starts = Pin.pin(nbrArr.select(col("node"))
-      .select(col("node").as("walk_id"), col("node").as("cur")))
+    val starts = nbrArr.select(col("node"))
+      .select(col("node").as("walk_id"), col("node").as("cur"))
+      .localCheckpoint()
     var out = starts.select(col("walk_id"), lit(0L).as("step"),
       col("cur").as("node_id"))
     // step 1: uniform ranked pick, shared with the unbiased variant —
     // the sorted array IS the rank order, so indexing it at the hash
     // pick selects the same neighbor [[walkSteps]]'s rk-residual join
     // does (one frontier-sized join, array side cached)
-    var frontier = Pin.pin(starts
+    var frontier = starts
       .join(nbrArr.select(col("node").as("cur"), col("nbrs").as("__cn")),
         Seq("cur"))
       .select(col("walk_id"), col("cur").as("prev"),
         element_at(col("__cn"),
-          (expr(pickExpr(1, "size(__cn)")) + 1).cast("int")).as("cur")))
+          (expr(pickExpr(1, "size(__cn)")) + 1).cast("int")).as("cur"))
+      .localCheckpoint()
     out = out.unionAll(frontier.select(col("walk_id"), lit(1L).as("step"),
       col("cur").as("node_id")))
     for (s <- 2 to length) {
       val sel = biasedStep(frontier, nbrArr, s, wReturn, wCommon, wOut)
-      frontier = Pin.pin(sel.select(col("walk_id"),
-        col("cur").as("prev"), col("nbr").as("cur")))
+      frontier = sel.select(col("walk_id"),
+        col("cur").as("prev"), col("nbr").as("cur")).localCheckpoint()
       out = out.unionAll(frontier.select(col("walk_id"),
         lit(s.toLong).as("step"), col("cur").as("node_id")))
     }
@@ -440,24 +442,24 @@ object Walks {
     require(fromLength >= 1, "biased extension needs steps 0 and 1")
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "biased-walk weights must be strictly positive")
-    val e = ensurePinned(edges.select(col("u").cast("long").as("u"),
+    val e = Pin.ensure(edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")))
     val nbrArr = neighborArrays(e)
     // ONE evaluation of the prior corpus — it feeds the two frontier
     // reads (steps L and L−1) and the output prefix; see
     // [[extendWalks]] (round 13)
     val p = Pin.ensure(prior)
-    var frontier = Pin.pin(p
+    var frontier = p
       .filter(col("step") === fromLength.toLong)
       .select(col("walk_id"), col("node_id").as("cur"))
       .join(p.filter(col("step") === (fromLength - 1).toLong)
         .select(col("walk_id"), col("node_id").as("prev")), Seq("walk_id"))
-      .select(col("walk_id"), col("prev"), col("cur")))
+      .select(col("walk_id"), col("prev"), col("cur")).localCheckpoint()
     var out = p.select(col("walk_id"), col("step"), col("node_id"))
     for (s <- fromLength + 1 to fromLength + extraSteps) {
       val sel = biasedStep(frontier, nbrArr, s, wReturn, wCommon, wOut)
-      frontier = Pin.pin(sel.select(col("walk_id"),
-        col("cur").as("prev"), col("nbr").as("cur")))
+      frontier = sel.select(col("walk_id"),
+        col("cur").as("prev"), col("nbr").as("cur")).localCheckpoint()
       out = out.unionAll(frontier.select(col("walk_id"),
         lit(s.toLong).as("step"), col("cur").as("node_id")))
     }
@@ -527,8 +529,8 @@ object Walks {
                     wCommon: Long, wOut: Long): DataFrame = {
     // both variants walk the SAME graph — pin the edge build once
     // instead of once per variant
-    val edges = Pin.pin(edges0.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
+    val edges = edges0.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")).localCheckpoint()
     def returns(w: DataFrame, variant: String): DataFrame = {
       // compare node_t with node_{t+2}: shift the later step back by
       // 2 and equi-join on (walk_id, step) — one comparison per
@@ -545,12 +547,12 @@ object Walks {
           col("n_returns"),
           expr("(n_returns * 1000000L) div n_steps").as("return_ppm"))
     }
-    returns(Dedup.spreadCached(walksKernel(edges, length),
-        "walks.audit.u", col("walk_id")), "uniform")
+    returns(Pin.keyed(walksKernel(edges, length),
+        "walks.audit.u", Seq(col("walk_id"))), "uniform")
       .unionAll(returns(
-        Dedup.spreadCached(
+        Pin.keyed(
           biasedWalksKernelPinned(edges, length, wReturn, wCommon, wOut),
-          "walks.audit.b", col("walk_id")),
+          "walks.audit.b", Seq(col("walk_id"))),
         "biased"))
       .orderBy("variant")
   }

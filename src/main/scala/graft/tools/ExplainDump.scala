@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_CPUS) so join strategies and exchange counts match
   * what the bench executes. The printed plan is the initial AQE
   * plan, but constructing a query DOES run its eager pins
-  * (localCheckpoint count / pinByKey persist+count) — so each dump
+  * (localCheckpoint count / Pin.keyed persist+count) — so each dump
   * costs real work, and the cache is cleared after each query to
   * keep multi-query invocations bounded (ADVICE r12).
   */

@@ -10,12 +10,18 @@ class GraphSpec extends SparkSpec {
 
   test("triangle counts on a hand-built graph") {
     // K4 on {1,2,3,4} (every node in C(3,2)=3 triangles) plus a
-    // pendant 5 and a disconnected edge 6-7 (no triangles).
-    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (6L, 7L)).toDF("u", "v")
-    val got = Graph.triangleCounts(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    // pendant 5 and a disconnected edge 6-7 (no triangles). Run again
+    // with every id offset by 2^31: ids that no longer pack into 32
+    // bits take the two-column closing-join fallback.
+    Seq(0L, 1L << 31).foreach { off =>
+      val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+        (3L, 4L), (4L, 5L), (6L, 7L))
+        .map { case (u, v) => (u + off, v + off) }.toDF("u", "v")
+      val got = Graph.triangleCounts(edges)
+        .as[(Long, Long)].collect().toMap
+      assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L)
+        .map { case (n, t) => (n + off, t) }, s"offset $off")
+    }
   }
 
   test("hub node: star graph has zero triangles") {
@@ -260,11 +266,16 @@ class GraphSpec extends SparkSpec {
     // cycle 1-2-3-4-1 plus chord 1-3: (1,3) shares {2,4} but IS an
     // edge -> excluded; (2,4) shares {1,3}, deg 2 = deg 4 = 2 ->
     // jaccard = 2/(2+2-2) = 1e6 ppm, the only row at minCn=2
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L))
-      .toDF("u", "v")
-    val got = Graph.linkPredict(edges, minCn = 2, k = 10)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    assert(got == Seq((2L, 4L, 2L, 2L, 2L, 1000000L)))
+    // Run again with every id offset by 2^31: ids that no longer pack
+    // into 32 bits take cnAgg's two-column-key fallback.
+    Seq(0L, 1L << 31).foreach { off =>
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L))
+        .map { case (u, v) => (u + off, v + off) }.toDF("u", "v")
+      val got = Graph.linkPredict(edges, minCn = 2, k = 10)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+      assert(got == Seq((2L + off, 4L + off, 2L, 2L, 2L, 1000000L)),
+        s"offset $off")
+    }
   }
 
   test("linkPredict: apex-degree guard suppresses hub wedges") {

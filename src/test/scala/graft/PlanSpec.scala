@@ -445,8 +445,8 @@ class PlanSpec extends SparkSpec {
       s"contract did not catch the broadcast->sort-merge drift:\n$p")
   }
 
-  test("pin storage dial: disk_only posture is honored and rank results " +
-    "are invariant to it") {
+  test("rank pin: the two-phase rank checkpoints its range draw " +
+    "MEMORY_AND_DISK and repeated runs are bit-identical") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.storage.StorageLevel
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
@@ -454,49 +454,52 @@ class PlanSpec extends SparkSpec {
       col("l_extendedprice")).orderBy("part_id").collect().toSeq
     val base = run()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set(ext.Pin.ConfKey, "disk_only")
-    try {
-      val dialed = run()
-      assert(dialed == base,
-        "two-phase rank must be bit-identical under the disk_only pin")
-      // the NEW pinned rdd(s) of this run carry DISK_ONLY, proving the
-      // dial reached the checkpoint (not just a conf no-op)
-      val fresh = spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }.values
-      assert(fresh.nonEmpty &&
-        fresh.forall(_.getStorageLevel == StorageLevel.DISK_ONLY),
-        s"expected fresh DISK_ONLY pins, got ${fresh.map(_.getStorageLevel)}")
-    } finally spark.conf.unset(ext.Pin.ConfKey)
+    assert(run() == base,
+      "two-phase rank must be bit-identical across runs")
+    // the NEW pinned rdd(s) of this run carry the checkpoint's
+    // MEMORY_AND_DISK level, proving the rank core pinned its draw
+    val fresh = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before.contains(id) }.values
+    assert(fresh.nonEmpty &&
+      fresh.forall(_.getStorageLevel == StorageLevel.MEMORY_AND_DISK),
+      s"expected fresh MEMORY_AND_DISK pins, got ${fresh.map(_.getStorageLevel)}")
   }
 
-  test("rank mode dial: fences posture checkpoints nothing row-scale " +
-    "and rank results are invariant to it") {
-    import org.apache.spark.sql.functions.col
+  test("rank core equals the single-window reference on both rank " +
+    "shapes (pareto cumsum, suffix prefix ranks)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // one desc-normalized cumsum (pareto), one multi-key dense rank
     // (suffix prefix ranks) — the two shapes the shared core serves
-    def pareto() = ext.Profiler.paretoAbc(li, col("l_partkey"),
+    val p0 = ext.Profiler.paretoAbc(li, col("l_partkey"),
       col("l_extendedprice")).orderBy("part_id").collect().toSeq
-    def sa() = ext.SuffixArray.prefixRanks(docs, col("doc_id"),
+    val s0 = ext.SuffixArray.prefixRanks(docs, col("doc_id"),
       col("text"), 8).orderBy("doc_id", "pos").collect().toSeq
-    val (p0, s0) = (pareto(), sa())
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set(ext.Rank.ModeKey, "fences")
-    try {
-      assert(pareto() == p0,
-        "globalCumsum must be bit-identical under rank.mode=fences")
-      // the cumsum core alone may not have pinned ANY new rdd under
-      // fences — it materializes only driver-side fence stats.
-      // (Checked before sa(): the doubling loop's per-round id pins
-      // are mode-independent and would show up as fresh.)
-      val fresh = spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-      assert(fresh.isEmpty,
-        s"fences mode must not checkpoint row-scale state, pinned ${fresh.size}")
-      assert(sa() == s0,
-        "denseRank must be bit-identical under rank.mode=fences")
-    } finally spark.conf.unset(ext.Rank.ModeKey)
+    // references: the same definitions as ONE global window each
+    val rev = li.groupBy(col("l_partkey").cast("long").as("part_id"))
+      .agg((sum(col("l_extendedprice").cast("decimal(14,2)")) * 100)
+        .cast("long").as("rev_cents"))
+    val total = rev.agg(sum(col("rev_cents"))).first().getLong(0)
+    val paretoRef = rev
+      .withColumn("__cum", sum(col("rev_cents")).over(Window
+        .orderBy(col("rev_cents").desc, col("part_id"))))
+      .select(col("part_id"), col("rev_cents"),
+        expr(s"__cum * 1000000 div $total").cast("long"))
+      .orderBy("part_id").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(p0.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ==
+      paretoRef, "globalCumsum must equal the single-window running sum")
+    val saRef = docs.select(col("doc_id").cast("long").as("doc_id"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "w")),
+        split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        dense_rank().over(Window.orderBy(
+          expr("slice(ws, pos + 1, 8)"))).cast("long").as("rank"))
+      .orderBy("doc_id", "pos").collect().toSeq
+    assert(s0 == saRef,
+      "denseRank must equal the single-window dense_rank over prefixes")
   }
 
   test("link_predict_approx: equi-joins only — banding and array " +

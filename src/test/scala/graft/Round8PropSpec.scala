@@ -106,12 +106,12 @@ class Round8PropSpec extends SparkSpec {
     }
   }
 
-  test("rank fences mode equals checkpoint mode equals the plain-Scala " +
-    "cumsum on random data (both rank shapes)") {
-    // the r8 Rank.withPidAndBase dial: fences must be bit-identical to
-    // the pinned path on arbitrary (value, unique-key) data, including
-    // duplicate values, negative values, and sizes around the
-    // shuffle-partition count where buckets go empty
+  test("rank checkpoint path is repeatable and equals the plain-Scala " +
+    "cumsum on random data") {
+    // Rank.withPidAndBase must be bit-identical across runs and exact
+    // on arbitrary (value, unique-key) data, including duplicate
+    // values, negative values, and sizes around the shuffle-partition
+    // count where buckets go empty
     val gen: Gen[Seq[(Long, Long)]] = for {
       n <- Gen.choose(1, 120)
       vals <- Gen.listOfN(n, Gen.choose(-4L, 4L))
@@ -128,11 +128,7 @@ class Round8PropSpec extends SparkSpec {
           .select(col("part_id"), col("rev_cents"), col("cum_ppm"))
           .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
       val base = run()
-      spark.conf.set(graft.ext.Rank.ModeKey, "fences")
-      try {
-        assert(run() == base,
-          s"fences diverged from checkpoint on $rows")
-      } finally spark.conf.unset(graft.ext.Rank.ModeKey)
+      assert(run() == base, s"rerun diverged from the first run on $rows")
       // plain-Scala ground truth for the running total (desc by value,
       // asc by id — pareto's order), checked against the checkpoint run
       val total = rows.map(_._1 * 100).sum

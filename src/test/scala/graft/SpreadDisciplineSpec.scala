@@ -68,17 +68,39 @@ class SpreadDisciplineSpec extends SparkSpec {
   test("the discipline assertion CAN fire: a single-partition round " +
       "checkpoint is rejected (canary for the tripwire itself)") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.ext.Pin
     val df = (1L to 100L).toDF("x").coalesce(1).localCheckpoint()
     val e = intercept[IllegalArgumentException] {
-      graft.ext.Dedup.assertSpread(df, "canary")
+      Pin.assertSpread(df, "canary")
     }
     assert(e.getMessage.contains("single-task trap"))
-    // and the real helper lands wide at ANY size — repartition-by-num
+    // and both pin modes land wide at ANY size — repartition-by-num
     // is AQE-exempt, so even 100 rows carry the full shuffle width
-    val ok = graft.ext.Dedup.spreadPinned(
-      (1L to 100L).toDF("x"), "canary-ok", org.apache.spark.sql
-        .functions.col("x"))
-    assert(ok.rdd.getNumPartitions ==
-      spark.sessionState.conf.numShufflePartitions)
+    val width = spark.sessionState.conf.numShufflePartitions
+    val ok = Pin.checkpoint((1L to 100L).toDF("x"), "canary-ok", col("x"))
+    assert(ok.rdd.getNumPartitions == width)
+    // the keyed mode's no-cross-run-cache tripwire: a pure parquet-scan
+    // derivation is refused (a cached plan would serve a later run) ...
+    val scan = spark.read.parquet(s"$sf/lineitem.parquet")
+      .select(col("l_partkey").as("x"))
+    val t = intercept[IllegalArgumentException] {
+      Pin.keyed(scan, "canary-scan", Seq(col("x")))
+    }
+    assert(t.getMessage.contains("lineage-unique"))
+    // ... while the same pin above a checkpoint or a literal relation
+    // is accepted, at `width` x the shuffle width
+    val overCkpt = Pin.keyed(scan.localCheckpoint(), "canary-ckpt",
+      Seq(col("x")))
+    val overLocal = Pin.keyed((1L to 100L).toDF("x"), "canary-local",
+      Seq(col("x")), width = 2)
+    try {
+      assert(overCkpt.rdd.getNumPartitions == width)
+      assert(overLocal.rdd.getNumPartitions == 2 * width)
+      assert(overLocal.count() == 100L)
+    } finally {
+      overCkpt.unpersist()
+      overLocal.unpersist()
+    }
   }
 }
